@@ -34,7 +34,7 @@ EXACT_SUFFIXES = (
     ".jobs", ".tasks", ".files_written", ".records",
     ".read_tasks", ".partitions_dropped", ".sku_mart_files", ".novel_frac",
 )
-FIRST_OPS = {"daily_file": 3, "landing_stream": 6, "query_mix": 12}
+FIRST_OPS = {"daily_file": 3, "landing_stream": 6, "query_mix": 24}
 #: (span, field) pairs that may differ between runs, see above
 MAY_DIFFER = {("streaming.pos_stream_ingest", "jobs"), ("streaming.pos_stream_ingest", "tasks")}
 
